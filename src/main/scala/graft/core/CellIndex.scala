@@ -99,8 +99,10 @@ object CellIndex {
   @inline def cell(lon: Double, lat: Double, level: Int): Long =
     TileMath.pack(level, cellX(lon, level), cellY(lat, level))
 
-  /** All cells at `level` intersecting the lon/lat envelope (inclusive). */
+  /** All cells at `level` intersecting the lon/lat envelope (inclusive).
+    * An inverted envelope contains no point and covers nothing. */
   def cover(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double, level: Int): Array[Long] = {
+    if (minLon > maxLon || minLat > maxLat) return Array.emptyLongArray
     val x0 = cellX(minLon, level); val x1 = cellX(maxLon, level)
     val y0 = cellY(maxLat, level); val y1 = cellY(minLat, level)
     val out = new Array[Long]((x1 - x0 + 1) * (y1 - y0 + 1))

@@ -67,8 +67,16 @@ object Hex {
     // fail loudly: size <= 0 / NaN would saturate the loop bounds and
     // silently return an EMPTY cover — a join that quietly drops rows
     require(size > 0.0, s"hex size must be positive, got $size")
-    val x0 = minx - size; val x1 = maxx + size
-    val y0 = miny - size; val y1 = maxy + size
+    // an inverted envelope contains no point; expanding it by `size`
+    // must not turn it into a non-empty box
+    if (minx > maxx || miny > maxy) return Array.emptyLongArray
+    // expand by the circumradius plus a rounding slack: a point on a hex
+    // vertex is exactly `size` from its center, and that center computed
+    // in doubles can land an ulp outside a box expanded by `size` alone
+    val mag = math.max(math.max(math.abs(minx), math.abs(maxx)), math.max(math.abs(miny), math.abs(maxy)))
+    val pad = size + 1e-9 * (size + mag)
+    val x0 = minx - pad; val x1 = maxx + pad
+    val y0 = miny - pad; val y1 = maxy + pad
     val s3 = math.sqrt(3.0) * size
     val rLo = math.floor((2.0 / 3.0) * y0 / size).toLong - 1
     val rHi = math.ceil((2.0 / 3.0) * y1 / size).toLong + 1

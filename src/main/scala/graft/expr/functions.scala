@@ -359,7 +359,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     registry.foreach { case (name, (info, builder)) =>
       ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => graft.sql.CellJoinRule())
+    ext.injectOptimizerRule(_ => graft.sql.CellJoinRule)
   }
 }
 
@@ -525,8 +525,8 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
     }
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.sql.CellJoinRule]))
+    if (!spark.experimental.extraOptimizations.contains(graft.sql.CellJoinRule))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sql.CellJoinRule()
+        spark.experimental.extraOptimizations :+ graft.sql.CellJoinRule
   }
 }

@@ -3,16 +3,19 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.expr.functions._
+import graft.sql.Cells.Quad
 
 /** Geometry-output layer algebra (SURVEY.md §2.3; reference:
   * OGRLayer::Intersection ogrlayer.cpp:5385, Union :5803, SymDifference
   * :6340, Identity :6770, Update :7188, Clip :7537, Erase :7846).
   *
-  * Distributed shape shared by every op: both layers explode their
-  * geometry envelopes to covering cells at one level, pair on the cell
-  * equi-join (the scalable replacement for the reference's per-feature
-  * SetSpatialFilterRect index walk), refine by exact geometry overlay, and
-  * dedup pairs that met on several cells by (aKey, bKey). Per-pair
+  * Distributed shape shared by every op: candidate pairs come from
+  * `SpatialJoin.join` on `Quad(level)` cells (the scalable replacement for
+  * the reference's per-feature SetSpatialFilterRect index walk): both
+  * layers explode their geometry envelopes to covering cells, pair on the
+  * cell equi-join, and keep each pair only on its canonical cell (the
+  * cell of the envelope intersection's min corner), so a pair surfaces
+  * once with no dedup pass; exact geometry overlay refines. Per-pair
   * geometry kernels are core.Clip (convex method/clip geometries — the
   * engine's whole clip surface: boxes, tiles, envelopes, hulls).
   *
@@ -29,30 +32,23 @@ import graft.expr.functions._
   */
 object LayerAlgebra {
 
-  /** Candidate pairs whose envelopes intersect, one row per (aKey, bKey). */
-  def pairGeoms(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
-                aWkb: String, bWkb: String, level: Int = 6): DataFrame = {
-    val l = a.withColumn("__cell", explode(cells_at(st_env(col(aWkb)), level)))
-    val r = b.withColumn("__cell", explode(cells_at(st_env(col(bWkb)), level)))
-    l.join(r, Seq("__cell"))
-      .filter(st_intersects_env(col(bWkb), st_env(col(aWkb))))
-      .drop("__cell")
-      .dropDuplicates(aKey, bKey)
-  }
+  /** Pairs where b's geometry intersects a's envelope, each once. */
+  private def pairGeoms(a: DataFrame, b: DataFrame, aWkb: String, bWkb: String,
+                        level: Int): DataFrame =
+    SpatialJoin.join(a, b, st_intersects_env(col(bWkb), st_env(col(aWkb))), Quad(level))
 
   /** Intersection: one row per intersecting pair, fields from both,
     * geom = a ∩ b (pairs whose exact intersection is empty are dropped). */
   def intersection(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
                    aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame =
-    pairGeoms(a, b, aKey, bKey, aWkb, bWkb, level)
+    pairGeoms(a, b, aWkb, bWkb, level)
       .withColumn("geom", st_intersection(col(aWkb), col(bWkb)))
       .filter(col("geom").isNotNull)
 
   /** Per-input-feature method-geometry gather: (aKey, __clips array). */
   private def clipsPerFeature(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
                               aWkb: String, bWkb: String, level: Int): DataFrame =
-    pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bKey), col(bWkb)),
-      aKey, bKey, aWkb, bWkb, level)
+    pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bKey), col(bWkb)), aWkb, bWkb, level)
       .groupBy(col(aKey))
       .agg(collect_list(col(bWkb)).as("__clips"))
 
@@ -75,7 +71,7 @@ object LayerAlgebra {
   def clip(a: DataFrame, b: DataFrame, aKey: String, bKey: String,
            aWkb: String = "wkb_a", bWkb: String = "wkb_b", level: Int = 6): DataFrame = {
     val pieces = pairGeoms(a.select(col(aKey), col(aWkb)), b.select(col(bKey), col(bWkb)),
-      aKey, bKey, aWkb, bWkb, level)
+      aWkb, bWkb, level)
       .withColumn("__piece", st_intersection(col(aWkb), col(bWkb)))
       .filter(col("__piece").isNotNull)
       .groupBy(col(aKey))

@@ -1,90 +1,46 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
-import graft.expr.functions._
+import org.apache.spark.sql.graft.Bridge
+import graft.sql.{CellJoinRule, Cells}
+import graft.sql.Cells.Quad
 
 /** Distributed filter-refine spatial joins (SURVEY.md §2.3).
   *
-  * Shape: geometry side explodes to covering cell ids at a fixed level
-  * (coarse global index — the distributed replacement for the reference's
-  * per-layer spatial indexes), point side computes its single cell, the
-  * cell is an ordinary long equi-join key (Catalyst picks broadcast/SMJ,
-  * AQE handles skewed hot cells), and the exact PIP expression refines —
-  * the two-phase contract of OGRLayer::FilterGeometry
-  * (ogrlayer.cpp:4004-4072).
-  *
-  * Each (point, polygon) pair meets on exactly one cell (the point's), so
-  * no post-join dedup is needed.
+  * [[join]] is the cell-keyed shuffle join for layers of any size: the
+  * geometry side explodes to the cells covering its envelope (a coarse
+  * global index — the distributed replacement for the reference's
+  * per-layer spatial indexes), the cell is an ordinary long equi-join key
+  * (Catalyst picks broadcast/SMJ, AQE splits skewed hot cells), and the
+  * join's own spatial predicate refines — the two-phase contract of
+  * OGRLayer::FilterGeometry (ogrlayer.cpp:4004-4072). Point-in-polygon
+  * joins key the point side on its single cell; geometry/envelope pairs
+  * explode both sides and keep each pair only on its canonical cell (the
+  * cell of the envelope intersection's min corner), so every pair
+  * surfaces exactly once with no dedup pass. The plan is built by
+  * [[graft.sql.CellJoinRule.rewrite]], the same builder the SQL surface
+  * uses. [[pipJoinIndexed]] and [[envMatchIndexed]] are the broadcast
+  * STR-tree alternatives for polygon layers that fit in memory.
   */
 object SpatialJoin {
 
-  /** points(…, lonCol, latCol) ⋈ polys(…, wkbCol) on exact containment. */
-  def pipJoin(points: DataFrame, polys: DataFrame, level: Int = 7,
-              lonCol: String = "lon", latCol: String = "lat",
-              wkbCol: String = "wkb"): DataFrame = {
-    val p = polys.withColumn("__cell", explode(cells_at(st_env(col(wkbCol)), level)))
-    val q = points.withColumn("__cell", cell_of(col(lonCol), col(latCol), level))
-    q.join(p, Seq("__cell"))
-      .filter(st_contains_point(col(wkbCol), col(lonCol), col(latCol)))
-      .drop("__cell")
-  }
-
-  /** [[pipJoin]] keyed on HEXAGONAL cells (core.Hex) instead of quadkey
-    * cells — the cell-system-agnostic claim made concrete: the polygon
-    * side explodes to `hex_cover` of its envelope (center-in-expanded-box
-    * rule, a recall-safe superset by the circumradius bound), the point
-    * side computes its single hex, and the same exact PIP refine
-    * restores equality. Results are identical to [[pipJoin]] by
-    * construction — the q172 oracle is the direct theta join. Hexes
-    * trade ~30% lower cover cardinality per area (better candidate
-    * selectivity) against no hierarchical parent/child relation (no
-    * multi-level pruning). */
-  def hexPipJoin(points: DataFrame, polys: DataFrame, size: Double = 4.0,
-                 lonCol: String = "lon", latCol: String = "lat",
-                 wkbCol: String = "wkb"): DataFrame = {
-    val p = polys.withColumn("__hex", explode(hex_cover(st_env(col(wkbCol)), size)))
-    val q = points.withColumn("__hex", hex_of(col(lonCol), col(latCol), size))
-    q.join(p, Seq("__hex"))
-      .filter(st_contains_point(col(wkbCol), col(lonCol), col(latCol)))
-      .drop("__hex")
-  }
-
-  /** envelope(geom) ⋈ polys on exact polygon×box intersection — the
-    * footprint×region join (Clip/Intersection-style layer algebra seed).
-    * Left side must carry an `envCol` array<double>[4]. Cell lists of BOTH
-    * sides are exploded, so pairs can meet on several cells → dedup by the
-    * provided key columns. */
-  def envJoin(lefts: DataFrame, polys: DataFrame, leftKey: String, polyKey: String,
-              level: Int = 6, envCol: String = "env", wkbCol: String = "wkb"): DataFrame = {
-    val l = lefts.withColumn("__cell", explode(cells_at(col(envCol), level)))
-    val p = polys.withColumn("__cell", explode(cells_at(st_env(col(wkbCol)), level)))
-    l.join(p, Seq("__cell"))
-      .filter(st_intersects_env(col(wkbCol), col(envCol)))
-      .drop("__cell")
-      .dropDuplicates(leftKey, polyKey)
-  }
-
-  /** Salted PIP join for hot-cell skew: polygon cell rows replicate into
-    * `salt` buckets, each point picks one pseudo-random bucket, and the
-    * equi-join key becomes (cell, salt). Hot cells (a world-spanning
-    * region, a dense metro cell) split across `salt` reducers instead of
-    * one. Semantics identical to pipJoin (each point still meets each
-    * polygon exactly once — on the point's cell and the point's salt).
-    * Use when AQE skew splitting isn't enough (e.g. the build side is too
-    * big to broadcast AND one cell dominates). */
-  def pipJoinSalted(points: DataFrame, polys: DataFrame, level: Int = 7, salt: Int = 8,
-                    lonCol: String = "lon", latCol: String = "lat",
-                    wkbCol: String = "wkb"): DataFrame = {
-    val p = polys
-      .withColumn("__cell", explode(cells_at(st_env(col(wkbCol)), level)))
-      .withColumn("__salt", explode(org.apache.spark.sql.functions.array((0 until salt).map(lit): _*)))
-    val q = points
-      .withColumn("__cell", cell_of(col(lonCol), col(latCol), level))
-      .withColumn("__salt", pmod(hash(col(lonCol), col(latCol)), lit(salt)))
-    q.join(p, Seq("__cell", "__salt"))
-      .filter(st_contains_point(col(wkbCol), col(lonCol), col(latCol)))
-      .drop("__cell", "__salt")
+  /** `left.join(right, on, how)` planned as a cell-keyed join on `cells`.
+    * `on` must hold `st_contains_point(wkb, lon, lat)`, `st_intersects(a,
+    * b)` or `st_intersects_env(wkb, env)` with its arguments split across
+    * the sides; other conjuncts refine alongside it. `how` is "inner", or
+    * "left_semi"/"left_anti" for a PIP join whose points are on the left. */
+  def join(left: DataFrame, right: DataFrame, on: Column, cells: Cells = Quad(7),
+           how: String = "inner"): DataFrame = {
+    val plan = Some(left.join(right, on, how).queryExecution.analyzed)
+      .collect { case j: Join => j }
+      .flatMap(CellJoinRule.rewrite(_, cells, cells))
+      .getOrElse(throw new IllegalArgumentException(
+        s"SpatialJoin.join: $on has no st_contains_point, st_intersects or st_intersects_env " +
+          s"predicate splitting across the two sides, or a $how join of that shape cannot be " +
+          "cell-keyed (semi/anti joins need a PIP predicate with the points on the left)"))
+    Bridge.ofRows(left.sparkSession, plan)
   }
 
   /** Broadcast-indexed PIP join: the polygon side is collected, bulk-
@@ -92,7 +48,7 @@ object SpatialJoin {
     * local-index plan of SURVEY §4: coarse cells globally, fine R-tree
     * locally), broadcast, and each point partition probes the tree then
     * refines exactly. No shuffle AT ALL on the point side — the
-    * alternative physical plan to pipJoin when the polygon side fits in
+    * alternative physical plan to [[join]] when the polygon side fits in
     * memory (dims, region tables); semantics identical. */
   def pipJoinIndexed(points: DataFrame, polys: DataFrame,
                      lonCol: String = "lon", latCol: String = "lat",
@@ -104,7 +60,7 @@ object SpatialJoin {
     require(polyRows.length <= maxPolys,
       s"pipJoinIndexed: polygon side exceeds maxPolys=$maxPolys rows; " +
         "it must fit in driver/executor memory to broadcast — use " +
-        "SpatialJoin.pipJoin (cell-keyed shuffle join) for large polygon layers")
+        "SpatialJoin.join (cell-keyed shuffle join) for large polygon layers")
     val wkbIdx = polys.schema.fieldIndex(wkbCol)
     val envs = polyRows.map { r =>
       val (a, b, c, d) = graft.core.Wkb.envelope(r.getAs[Array[Byte]](wkbIdx))
@@ -135,33 +91,22 @@ object SpatialJoin {
     * — pipJoinIndexed's envelope×polygon sibling). ZERO shuffle on the
     * left side and no dedup pass: the semi-join filter is
     * `n_regions >= 1`. Use for dim-sized polygon layers; the fail-fast
-    * cap names [[envJoin]] (cell-keyed shuffle join) as the alternative
+    * cap names [[join]] (cell-keyed shuffle join) as the alternative
     * when the polygon side is corpus-sized. */
   def envMatchIndexed(lefts: DataFrame, polys: DataFrame, wkbCol: String = "wkb",
                       envCol: String = "env", maxPolys: Int = 1000000): DataFrame = {
-    // null geometries match nothing (envJoin's null-intolerant filter
+    // null geometries match nothing (the cell join's null-intolerant filter
     // semantics), and an empty layer yields n_regions = 0 everywhere
     // rather than an executor-side empty-STR-tree failure
     val polyRows = polys.select(col(wkbCol)).filter(col(wkbCol).isNotNull)
       .limit(maxPolys + 1).collect()
     require(polyRows.length <= maxPolys,
       s"envMatchIndexed: polygon side exceeds maxPolys=$maxPolys rows; " +
-        "use SpatialJoin.envJoin (cell-keyed shuffle join) for large polygon layers")
+        "use SpatialJoin.join (cell-keyed shuffle join) for large polygon layers")
     if (polyRows.isEmpty) lefts.withColumn("n_regions", lit(0))
     else {
       val idx = graft.expr.EnvIndex(polyRows.map(_.getAs[Array[Byte]](0)))
       lefts.withColumn("n_regions", graft.expr.functions.env_match_count(col(envCol), idx))
     }
-  }
-
-  /** Spatial semi-join: rows of `lefts` whose point falls in ANY polygon
-    * (Clip §2.3); anti = rows in none (Erase §2.3). */
-  def pipSemi(points: DataFrame, polys: DataFrame, level: Int = 7,
-              lonCol: String = "lon", latCol: String = "lat", wkbCol: String = "wkb",
-              anti: Boolean = false): DataFrame = {
-    val matches = pipJoin(points, polys, level, lonCol, latCol, wkbCol)
-      .select(points.columns.map(col): _*).dropDuplicates(points.columns.toSeq)
-    if (!anti) matches
-    else points.join(matches, points.columns.toSeq, "left_anti")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.expr.functions._
 import graft.gen.Fixtures
 import graft.ops.{Georef, Grid, Knn, SpatialJoin, Tiling}
+import graft.sql.Cells.{Hex, Quad}
 
 /** Geospatial operator surface (SURVEY.md §2.3/§2.8) under the driver's
   * DuckDB oracle. Geometry derives deterministically from the TPC-H keys
@@ -365,7 +366,7 @@ object Geospatial {
     ("q22_pip_join", (s: SparkSession, dir: String) => {
       val pts = Fixtures.pointsFromOrders(s, dir).select("point_id", "lon", "lat")
       val regions = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.pipJoin(pts, regions, level = 7)
+      SpatialJoin.join(pts, regions, st_contains_point(col("wkb"), col("lon"), col("lat")))
         .select(col("point_id"), col("region_id"))
     }, Some(s"""
       WITH $PtsCte
@@ -1286,7 +1287,7 @@ object Geospatial {
         .filter(col("srid") === 4326 && col("fmt") =!= "jpeg" && col("w") <= 64)
         .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       val zones = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.envJoin(images, zones, "key", "region_id", level = 5)
+      SpatialJoin.join(images, zones, st_intersects_env(col("wkb"), col("env")), Quad(5))
         .withColumn("zs", zone_stats(col("bytes"), col("fmt"), Tiling.meta9, col("wkb")))
         .filter(col("zs")(0) > 0)
         .groupBy(col("region_id"))
@@ -1311,7 +1312,7 @@ object Geospatial {
         .filter(col("srid") === 4326 && col("fmt") =!= "jpeg" && col("w") <= 64)
         .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       val zones = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.envJoin(images, zones, "key", "region_id", level = 5)
+      SpatialJoin.join(images, zones, st_intersects_env(col("wkb"), col("env")), Quad(5))
         .withColumn("zs", zone_stats_full(col("bytes"), col("fmt"), Tiling.meta9, col("wkb"), lit(1)))
         .filter(col("zs").isNotNull)
         .select(col("key"), col("region_id"),
@@ -2384,7 +2385,7 @@ object Geospatial {
         .filter(col("srid") === 4326 && col("key") % 10 === 0)
         .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       val zones = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.envJoin(images, zones, "key", "region_id", level = 5)
+      SpatialJoin.join(images, zones, st_intersects_env(col("wkb"), col("env")), Quad(5))
         .withColumn("tile", tile_cover(col("env"), 5, 5)(0))
         .withColumn("buf", warp_tile_cut(col("bytes"), col("fmt"), Tiling.meta9,
           col("tile"), lit("near"), col("wkb")))
@@ -3012,9 +3013,11 @@ object Geospatial {
     }),
 
     // §2.3 skew profile of the PIP-join key: points-per-cell quantiles at
-    // level 7 — the monitoring query a 100 TB ingest runs BEFORE picking
-    // the salt factor for the cell equi-join (SpatialJoin.pipJoinSalted's
-    // input: p99/p100 vs mean says how hot the hottest cells are). Exact
+    // level 7 — the monitoring query a 100 TB ingest runs before planning
+    // the cell equi-join of SpatialJoin.join, which meets each (point,
+    // polygon) pair on the point's one cell (geometry pairs on their
+    // canonical cell): p99/p100 vs mean says how hot the hottest cells are
+    // and whether AQE skew splitting suffices. Exact
     // via ops.Quantiles' histogram shape: the shuffle carries one row per
     // occupied cell, then one row per distinct per-cell count. Oracle
     // re-derives the level-7 cell grid (the q157 arithmetic at 128×128)
@@ -3102,7 +3105,7 @@ object Geospatial {
       GROUP BY t.hexq, t.hexr, t.n""")),
 
     // §2.3 the PIP join keyed on HEX cells — the cell-system-agnostic
-    // index claim made concrete: same filter-refine contract as q22,
+    // index claim made concrete: same SpatialJoin.join as q22 on Hex cells,
     // candidates from hex_cover (center-in-expanded-box, recall-safe by
     // the circumradius bound), exact PIP refine. The oracle is q22's
     // DIRECT theta join — result parity proves the hex cover misses
@@ -3110,7 +3113,8 @@ object Geospatial {
     ("q172_hex_pip_join", (s: SparkSession, dir: String) => {
       val pts = Fixtures.pointsFromOrders(s, dir).select("point_id", "lon", "lat")
       val regions = Fixtures.regionBoxes(s, dir)
-      SpatialJoin.hexPipJoin(pts, regions, size = 4.0)
+      SpatialJoin.join(pts, regions, st_contains_point(col("wkb"), col("lon"), col("lat")),
+          Hex(4.0))
         .select(col("point_id"), col("region_id"))
     }, Some(s"""
       WITH $PtsCte
@@ -3246,7 +3250,7 @@ object Geospatial {
       .withColumn("stats", image_stats(col("bytes"), col("fmt"), col("w"), col("h")))
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
     val regions = Fixtures.regionBoxes(s, dir)
-    val joined = SpatialJoin.envJoin(images, regions, "key", "region_id", level = 5)
+    val joined = SpatialJoin.join(images, regions, st_intersects_env(col("wkb"), col("env")), Quad(5))
     joined
       .withColumn("tile", explode(tile_cover(col("env"), 0, 4)))
       .groupBy(tile_z(col("tile")).as("z"))

@@ -1,120 +1,116 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
-import graft.expr.{CellOf, CellsAt, StContainsPoint, StIntersects, WkbEnvelope}
+import graft.expr.{CellOf, CellsAt, HexCover, HexOf, StContainsPoint, StIntersects, StIntersectsEnv, WkbEnvelope}
+import graft.sql.Cells.Quad
 
-/** Optimizer rule rewriting brute-force spatial-predicate joins into
-  * cell-keyed equi-joins (SURVEY.md §4 "optional Rule: auto-rewrite
-  * st_intersects joins → cell joins" / §7.5 sql module).
+/** Cell-keyed filter-refine spatial joins (SURVEY.md §4 / §7.5 sql
+  * module). [[rewrite]] is the one place such a join plan is built: this
+  * optimizer rule calls it for brute-force spatial-predicate joins, and
+  * `graft.ops.SpatialJoin.join` calls it for DataFrame joins. A coarse
+  * cell key proposes candidate pairs and the join's own spatial predicate
+  * refines them — the two-phase contract of OGRLayer::FilterGeometry
+  * (ogrlayer.cpp:4004-4072). Two shapes:
   *
-  * Two patterns, both requiring the predicate's arguments to split
-  * cleanly across the join sides, no pre-existing cell key, and no usable
-  * equi-key (Catalyst would hash-join on one anyway):
+  * 1. `st_contains_point(wkb, lon, lat)` — point in polygon. Only the
+  *    polygon side explodes:
   *
-  * 1. `st_contains_point(wkb, lon, lat)` — point-in-polygon:
-  *
-  *    points side  += __pip_cell = cell_of(lon, lat, L)
-  *    polygon side += Generate(explode(cells_at(st_env(wkb), L)))
+  *    points side  += __pip_cell = of(lon, lat)
+  *    polygon side += Generate(explode(cover(st_env(wkb))))
   *    join condition := (__pip_cell = __poly_cell) AND original
   *
-  *    Each (point, polygon) pair meets on exactly ONE cell (the point's),
-  *    so multiplicity is unchanged.
+  *    A point meets each polygon on its own cell only, so multiplicity is
+  *    unchanged. Inner joins, and LeftSemi/LeftAnti joins whose preserved
+  *    left side is the point side; any other layout would explode the
+  *    preserved side (repeating or wrongly keeping its rows) and is left
+  *    unrewritten.
   *
-  * 2. `st_intersects(a_wkb, b_wkb)` — geometry×geometry (the
-  *    LayerAlgebra.pairGeoms shape, reference filter-refine over
-  *    arbitrary geometry pairs, ogrlayer.cpp:4004-4072): BOTH sides
-  *    explode their envelope covers and join on the cell. A pair whose
-  *    envelopes share k cells would surface k times, so the rewrite adds
-  *    a CANONICAL-CELL conjunct — the pair is kept only on the cell of
-  *    the envelope-intersection's min corner
-  *    (max(minxₐ,minx_b), max(minyₐ,miny_b)), a point that lies in both
-  *    envelopes whenever they intersect, hence in both cover lists —
-  *    restoring exactly-once multiplicity with no dropDuplicates (and no
-  *    shuffle for it) in the plan.
+  * 2. `st_intersects(a_wkb, b_wkb)` or `st_intersects_env(wkb, env)` —
+  *    geometry pairs, inner joins only. BOTH sides explode the cover of
+  *    their envelope (`st_env(wkb)`, or the env argument itself) and join
+  *    on the cell. A pair whose envelopes share k cells would surface k
+  *    times, so a CANONICAL-CELL conjunct keeps it only on the cell of the
+  *    envelope intersection's min corner (max(minxₐ,minx_b),
+  *    max(minyₐ,miny_b)): a point in both envelopes whenever they
+  *    intersect, hence in both covers. Exactly-once output with no
+  *    dropDuplicates (and no shuffle for it) in the plan.
   *
-  * Without the rule Catalyst can only plan these as
-  * BroadcastNestedLoopJoin / CartesianProduct — O(|A|·|B|) comparisons.
-  * Output schema is restored by a trailing Project. Level via
-  * `spark.gdalspark.cellJoinLevel` (default 7 for PIP, one coarser for
-  * geometry pairs whose explode is two-sided). Idempotent: rewritten
-  * joins contain a CellOf/CellsAt conjunct and no longer match.
+  * Both shapes need the predicate's arguments to split cleanly across the
+  * join sides, no cell expression already in the condition, and no usable
+  * equi-key (Catalyst would hash-join on it anyway). Without the rewrite
+  * Catalyst can only plan these joins as BroadcastNestedLoopJoin /
+  * CartesianProduct — O(|A|·|B|) comparisons. The output schema is
+  * restored by a trailing Project. Idempotent: a rewritten join carries a
+  * cell equi-key and no longer matches.
   */
-case class CellJoinRule(level: Int = 7) extends Rule[LogicalPlan] {
+object CellJoinRule extends Rule[LogicalPlan] {
 
+  // geometry pairs explode both sides, so they key one level coarser
+  // than PIP to bound the explode factor
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case j @ Join(_, _, Inner | Cross, Some(cond), _) if eligible(j) =>
-      val conjuncts = splitConjuncts(cond)
-      val pip = conjuncts.collectFirst {
-        case p @ StContainsPoint(w, lon, lat)
-          if sidesSplit(j, w, Seq(lon, lat)).isDefined => p
-      }
-      pip match {
-        case Some(p) => rewritePip(j, p, cond)
-        case None =>
-          val gi = conjuncts.collectFirst {
-            case p @ StIntersects(a, b) if sidesSplit(j, a, Seq(b)).isDefined => p
-          }.get
-          rewriteGeomPair(j, gi, cond)
-      }
+    case j: Join => rewrite(j, Quad(7), Quad(6)).getOrElse(j)
   }
 
-  private def rewritePip(j: Join, pip: StContainsPoint, cond: Expression): LogicalPlan = {
-    val (polySide, pointSide) = sidesSplit(j, pip.first, Seq(pip.second, pip.third)).get
-
-    // point side: project the cell key
-    val pCellAlias = Alias(CellOf(pip.second, pip.third, Literal(level)), "__pip_cell")()
-    val pointProj = Project(pointSide.output :+ pCellAlias, pointSide)
-
-    // polygon side: explode covering cells
-    val gCellAttr = AttributeReference("__poly_cell", LongType, nullable = false)()
-    val gen = Generate(
-      Explode(CellsAt(WkbEnvelope(pip.first), Literal(level))),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(gCellAttr), child = polySide)
-
-    val cellEq = EqualTo(pCellAlias.toAttribute, gCellAttr)
-    val (newLeft, newRight) =
-      if (pointSide eq j.left) (pointProj: LogicalPlan, gen: LogicalPlan)
-      else (gen: LogicalPlan, pointProj: LogicalPlan)
-    val newJoin = Join(newLeft, newRight, Inner, Some(And(cellEq, cond)), j.hint)
-    Project(j.output, newJoin)
+  /** The cell-keyed plan of `j` — PIP joins keyed on `pipCells`, geometry
+    * pairs on `pairCells` — or None when `j` has neither shape. */
+  def rewrite(j: Join, pipCells: Cells, pairCells: Cells): Option[LogicalPlan] = {
+    val conjuncts = j.condition.toSeq.flatMap(splitConjuncts)
+    if (conjuncts.exists(keyed(j, _))) None
+    else conjuncts.collectFirst(Function.unlift(pip(j, _, pipCells)))
+      .orElse(conjuncts.collectFirst(Function.unlift(pair(j, _, pairCells))))
   }
 
-  private def rewriteGeomPair(j: Join, gi: StIntersects, cond: Expression): LogicalPlan = {
-    // geometry pairs explode BOTH sides — default one level coarser than
-    // the point join to bound the two-sided explode factor
-    val lvl = math.max(0, level - 1)
-    val (aSide, bSide) = sidesSplit(j, gi.left, Seq(gi.right)).get
-    val (aWkb, bWkb) = (gi.left, gi.right)
+  private def pip(j: Join, pred: Expression, cells: Cells): Option[LogicalPlan] = pred match {
+    case StContainsPoint(wkb, x, y) => sidesSplit(j, wkb, Seq(x, y)).filter { case (_, points) =>
+      j.joinType match {
+        case Inner | Cross => true
+        case LeftSemi | LeftAnti => points eq j.left
+        case _ => false
+      }
+    }.map { case (polys, points) =>
+      val key = Alias(cells.of(x, y), "__pip_cell")()
+      val (polyCells, polyCell) = explode(polys, cells.cover(WkbEnvelope(wkb)), "__poly_cell")
+      cellJoin(j, points eq j.left, Project(points.output :+ key, points), polyCells,
+        EqualTo(key.toAttribute, polyCell))
+    }
+    case _ => None
+  }
 
-    val aCell = AttributeReference("__cell_a", LongType, nullable = false)()
-    val bCell = AttributeReference("__cell_b", LongType, nullable = false)()
-    val genA = Generate(Explode(CellsAt(WkbEnvelope(aWkb), Literal(lvl))),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(aCell), child = aSide)
-    val genB = Generate(Explode(CellsAt(WkbEnvelope(bWkb), Literal(lvl))),
-      unrequiredChildIndex = Nil, outer = false, qualifier = None,
-      generatorOutput = Seq(bCell), child = bSide)
+  private def pair(j: Join, pred: Expression, cells: Cells): Option[LogicalPlan] = {
+    val envs = pred match {
+      case StIntersects(a, b) => Some((a, b, WkbEnvelope(a), WkbEnvelope(b)))
+      case StIntersectsEnv(wkb, env) => Some((wkb, env, WkbEnvelope(wkb), env))
+      case _ => None
+    }
+    envs.filter(_ => j.joinType == Inner || j.joinType == Cross).flatMap { case (a, b, envA, envB) =>
+      sidesSplit(j, a, Seq(b)).map { case (aSide, bSide) =>
+        val (aCells, aCell) = explode(aSide, cells.cover(envA), "__cell_a")
+        val (bCells, bCell) = explode(bSide, cells.cover(envB), "__cell_b")
+        val corner = cells.of(
+          Greatest(Seq(GetArrayItem(envA, Literal(0)), GetArrayItem(envB, Literal(0)))),
+          Greatest(Seq(GetArrayItem(envA, Literal(1)), GetArrayItem(envB, Literal(1)))))
+        cellJoin(j, aSide eq j.left, aCells, bCells,
+          And(EqualTo(aCell, bCell), EqualTo(aCell, corner)))
+      }
+    }
+  }
 
-    // canonical cell: min corner of the envelope intersection — inside
-    // both envelopes whenever they intersect, so exactly one of the k
-    // shared cells carries the pair
-    val envA = WkbEnvelope(aWkb)
-    val envB = WkbEnvelope(bWkb)
-    val cornerX = Greatest(Seq(GetArrayItem(envA, Literal(0)), GetArrayItem(envB, Literal(0))))
-    val cornerY = Greatest(Seq(GetArrayItem(envA, Literal(1)), GetArrayItem(envB, Literal(1))))
-    val canonical = EqualTo(aCell, CellOf(cornerX, cornerY, Literal(lvl)))
+  private def explode(side: LogicalPlan, cover: Expression, name: String): (LogicalPlan, Attribute) = {
+    val cell = AttributeReference(name, LongType, nullable = false)()
+    (Generate(Explode(cover), unrequiredChildIndex = Nil, outer = false, qualifier = None,
+      generatorOutput = Seq(cell), child = side), cell)
+  }
 
-    val (newLeft, newRight) =
-      if (aSide eq j.left) (genA: LogicalPlan, genB: LogicalPlan)
-      else (genB: LogicalPlan, genA: LogicalPlan)
-    val newJoin = Join(newLeft, newRight, Inner,
-      Some(And(EqualTo(aCell, bCell), And(canonical, cond))), j.hint)
-    Project(j.output, newJoin)
+  /** `j` over its two keyed sides on `key AND` the original condition. */
+  private def cellJoin(j: Join, firstIsLeft: Boolean, first: LogicalPlan, second: LogicalPlan,
+                       key: Expression): LogicalPlan = {
+    val (l, r) = if (firstIsLeft) (first, second) else (second, first)
+    val joinType = if (j.joinType == Cross) Inner else j.joinType
+    Project(j.output, Join(l, r, joinType, Some(And(key, j.condition.get)), j.hint))
   }
 
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {
@@ -128,31 +124,21 @@ case class CellJoinRule(level: Int = 7) extends Rule[LogicalPlan] {
                          otherArgs: Seq[Expression]): Option[(LogicalPlan, LogicalPlan)] = {
     val wRefs = wkb.references
     val pRefs = AttributeSet(otherArgs.flatMap(_.references))
-    if (wRefs.isEmpty || pRefs.isEmpty) return None
-    if (wRefs.subsetOf(j.left.outputSet) && pRefs.subsetOf(j.right.outputSet))
+    if (wRefs.isEmpty || pRefs.isEmpty) None
+    else if (wRefs.subsetOf(j.left.outputSet) && pRefs.subsetOf(j.right.outputSet))
       Some((j.left, j.right))
     else if (wRefs.subsetOf(j.right.outputSet) && pRefs.subsetOf(j.left.outputSet))
       Some((j.right, j.left))
     else None
   }
 
-  private def eligible(j: Join): Boolean = j.condition.exists { cond =>
-    val cs = splitConjuncts(cond)
-    // not already cell-keyed (idempotence + respect explicit cell joins)
-    !cs.exists(c => c.exists { case _: CellOf | _: CellsAt => true; case _ => false }) &&
-      cs.exists {
-        case StContainsPoint(w, lon, lat) => sidesSplit(j, w, Seq(lon, lat)).isDefined
-        case StIntersects(a, b) => sidesSplit(j, a, Seq(b)).isDefined
+  /** A conjunct that already keys the join: an explicit cell expression
+    * (idempotence, and explicit cell joins are respected) or an equi-key
+    * across the sides. */
+  private def keyed(j: Join, c: Expression): Boolean =
+    c.exists { case _: CellOf | _: CellsAt | _: HexOf | _: HexCover => true; case _ => false } ||
+      (c match {
+        case EqualTo(a, b) => sidesSplit(j, a, Seq(b)).isDefined
         case _ => false
-      } &&
-      // no usable equi-key already present (would hash-join anyway)
-      !cs.exists {
-        case EqualTo(a, b) =>
-          (a.references.subsetOf(j.left.outputSet) && b.references.subsetOf(j.right.outputSet) &&
-            a.references.nonEmpty && b.references.nonEmpty) ||
-            (a.references.subsetOf(j.right.outputSet) && b.references.subsetOf(j.left.outputSet) &&
-              a.references.nonEmpty && b.references.nonEmpty)
-        case _ => false
-      }
-  }
+      })
 }

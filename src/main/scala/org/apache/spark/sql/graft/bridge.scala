@@ -1,15 +1,21 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Column ⇄ Expression bridge. Spark 4 hides the classic converters behind
-  * `private[sql]`; extension libraries conventionally expose them from a
-  * shim in the sql package tree (no Spark internals are modified). */
+/** Column ⇄ Expression and LogicalPlan → DataFrame bridge. Spark 4 hides
+  * the classic converters behind `private[sql]`; extension libraries
+  * conventionally expose them from a shim in the sql package tree (no
+  * Spark internals are modified). */
 object Bridge {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -4,10 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.Wkb
 import graft.expr.functions._
+import graft.gen.Fixtures
+import graft.ops.SpatialJoin
+import graft.sql.Cells.Hex
 
-/** CellJoinRule: brute-force st_contains_point joins must rewrite to
+/** CellJoinRule: brute-force spatial-predicate joins must rewrite to
   * cell-keyed equi-joins (no nested-loop/cartesian plan) with unchanged
-  * results (SURVEY §4 auto-rewrite rule). */
+  * results (SURVEY §4 auto-rewrite rule), and SpatialJoin.join builds the
+  * same plans for DataFrames. */
 class CellJoinRuleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -37,9 +41,9 @@ class CellJoinRuleSpec extends AnyFunSuite {
     assert(plan.contains("cell_of") || plan.contains("__pip_cell"), "cell key absent from plan")
 
     val viaRule = brute.as[(Long, Long)].collect().toSet
-    val viaOp = graft.ops.SpatialJoin.pipJoin(p, g, level = 7)
+    val reference = TestSpark.bruteJoin(p, g, st_contains_point(col("wkb"), col("lon"), col("lat")))
       .select(col("point_id"), col("region_id")).as[(Long, Long)].collect().toSet
-    assert(viaRule == viaOp)
+    assert(viaRule == reference)
     assert(viaRule.nonEmpty)
   }
 
@@ -101,10 +105,9 @@ class CellJoinRuleSpec extends AnyFunSuite {
     val viaRule = joined.as[(Long, Long)].collect().toList
     // exactly-once multiplicity (the canonical-cell conjunct)
     assert(viaRule.size == viaRule.toSet.size, "pairs must surface exactly once")
-    val viaOp = graft.ops.LayerAlgebra.pairGeoms(layerA, layerB, "a_id", "b_id", "wkb_a", "wkb_b")
-      .filter(st_intersects(col("wkb_a"), col("wkb_b")))
+    val reference = TestSpark.bruteJoin(layerA, layerB, st_intersects(col("wkb_a"), col("wkb_b")))
       .select(col("a_id"), col("b_id")).as[(Long, Long)].collect().toSet
-    assert(viaRule.toSet == viaOp)
+    assert(viaRule.toSet == reference)
     assert(viaRule.nonEmpty)
   }
 
@@ -128,5 +131,62 @@ class CellJoinRuleSpec extends AnyFunSuite {
     val expect = (for { i <- 0 until 30; j <- 0 until 30
                         if 2 * j + 1 <= 2 * i + 3 && 2 * i <= 2 * j + 4 } yield (i.toLong, j.toLong)).toSet
     assert(df.as[(Long, Long)].collect().toSet == expect)
+  }
+
+  test("SQL semi/anti PIP joins are cell-keyed and partition the point set") {
+    val pts = Fixtures.pointsFromOrders(spark, TestSpark.Sf).select("point_id", "lon", "lat")
+    val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
+    pts.createOrReplaceTempView("pts_semi_cjr")
+    polys.createOrReplaceTempView("polys_semi_cjr")
+    def pointsThat(kind: String) = spark.sql(
+      s"""SELECT p.point_id FROM pts_semi_cjr p LEFT $kind JOIN polys_semi_cjr g
+         |  ON st_contains_point(g.wkb, p.lon, p.lat)""".stripMargin)
+    val (in, out) = (pointsThat("SEMI"), pointsThat("ANTI"))
+    for (df <- Seq(in, out)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"semi/anti PIP join did not rewrite:\n$plan")
+    }
+    val inIds = in.as[Long].collect()
+    val outIds = out.as[Long].collect()
+    val all = pts.select("point_id").as[Long].collect().toSet
+    assert(inIds.length + outIds.length == all.size)
+    assert(inIds.toSet.intersect(outIds.toSet).isEmpty && (inIds ++ outIds).toSet == all)
+    val brute = TestSpark.bruteJoin(pts, polys, st_contains_point(col("wkb"), col("lon"), col("lat")))
+    assert(inIds.toSet == brute.select("point_id").as[Long].collect().toSet && inIds.nonEmpty)
+
+    // polygons on the preserved left: exploding them would repeat each
+    // polygon once per covering cell, so the join stays unrewritten
+    val polysWithPoints = spark.sql(
+      """SELECT g.region_id FROM polys_semi_cjr g LEFT SEMI JOIN pts_semi_cjr p
+        |  ON st_contains_point(g.wkb, p.lon, p.lat)""".stripMargin)
+    assert(!polysWithPoints.queryExecution.optimizedPlan.toString.contains("__poly_cell"))
+    val regionIds = polysWithPoints.as[Long].collect()
+    assert(regionIds.length == regionIds.distinct.length)
+    assert(regionIds.toSet == brute.select("region_id").as[Long].collect().toSet)
+  }
+
+  test("SpatialJoin.join keys hexes and semi/anti joins, and names what it cannot key") {
+    val (p, g) = (points, polys)
+    val contains = st_contains_point(col("wkb"), col("lon"), col("lat"))
+    val brute = TestSpark.bruteJoin(p, g, contains)
+      .select(col("point_id"), col("region_id")).as[(Long, Long)].collect().toSet
+    val hex = SpatialJoin.join(p, g, contains, Hex(4.0))
+      .select(col("point_id"), col("region_id")).as[(Long, Long)].collect().toList
+    assert(hex.size == hex.toSet.size && hex.toSet == brute && brute.nonEmpty)
+
+    val semi = SpatialJoin.join(p, g, contains, how = "left_semi").select("point_id").as[Long].collect()
+    val anti = SpatialJoin.join(p, g, contains, how = "left_anti").select("point_id").as[Long].collect()
+    assert(semi.length == semi.distinct.length && semi.toSet == brute.map(_._1))
+    assert(semi.length + anti.length == 3000 && (semi.toSet & anti.toSet).isEmpty)
+
+    val noPredicate = intercept[IllegalArgumentException] {
+      SpatialJoin.join(p, g, col("point_id") === col("region_id"))
+    }
+    assert(noPredicate.getMessage.contains("SpatialJoin.join"))
+    val polygonsPreserved = intercept[IllegalArgumentException] {
+      SpatialJoin.join(g, p, contains, how = "left_semi")
+    }
+    assert(polygonsPreserved.getMessage.contains("SpatialJoin.join"))
   }
 }

@@ -8,6 +8,7 @@ import graft.gen.Fixtures
 import graft.ops.SpatialJoin
 import graft.pipeline.Pipeline
 import graft.pipeline.Pipeline.Stage
+import graft.sql.Cells.Quad
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
 
@@ -26,7 +27,8 @@ class PipelineSpec extends AnyFunSuite {
     }),
     Stage("join", Seq("decode"), "v1", (s: SparkSession, in: Map[String, DataFrame]) => {
       executed += "join"
-      SpatialJoin.envJoin(in("decode"), Fixtures.regionBoxes(s, dir), "key", "region_id", level = 5)
+      SpatialJoin.join(in("decode"), Fixtures.regionBoxes(s, dir),
+          st_intersects_env(col("wkb"), col("env")), Quad(5))
         .select("key", "region_id", "env")
     }),
     Stage("tiles", Seq("join"), "v1", (_: SparkSession, in: Map[String, DataFrame]) => {

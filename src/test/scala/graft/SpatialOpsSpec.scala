@@ -6,6 +6,7 @@ import graft.core.Wkb
 import graft.expr.functions._
 import graft.gen.Fixtures
 import graft.ops.{Knn, SpatialJoin}
+import graft.sql.Cells.Quad
 
 class SpatialOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -22,10 +23,10 @@ class SpatialOpsSpec extends AnyFunSuite {
         Array(-40.0, -70, 30, -70, 30, -20, -40, -20, -40, -70),
         Array(-20.0, -55, 10, -55, 10, -35, -20, -35, -20, -55)))))
       .toDF("region_id", "wkb")
-    val fast = SpatialJoin.pipJoin(pts, polys, level = 7)
+    val contains = st_contains_point(col("wkb"), col("lon"), col("lat"))
+    val fast = SpatialJoin.join(pts, polys, contains)
       .select("point_id", "region_id").as[(Long, Long)].collect().toSet
-    val brute = pts.crossJoin(polys)
-      .filter(st_contains_point(col("wkb"), col("lon"), col("lat")))
+    val brute = TestSpark.bruteJoin(pts, polys, contains)
       .select("point_id", "region_id").as[(Long, Long)].collect().toSet
     assert(fast == brute)
     assert(brute.nonEmpty, "fixture must produce matches")
@@ -33,15 +34,6 @@ class SpatialOpsSpec extends AnyFunSuite {
     val holeMatches = brute.count(_._2 == 4L)
     val bboxMatches = pts.filter(col("lon") > -40 && col("lon") < 30 && col("lat") > -70 && col("lat") < -20).count()
     assert(holeMatches < bboxMatches, "hole must carve out points")
-  }
-
-  test("pipSemi/anti partition the point set") {
-    val pts = Fixtures.pointsFromOrders(spark, TestSpark.Sf).select("point_id", "lon", "lat")
-    val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val in = SpatialJoin.pipSemi(pts, polys)
-    val out = SpatialJoin.pipSemi(pts, polys, anti = true)
-    assert(in.count() + out.count() == pts.count())
-    assert(in.join(out, Seq("point_id"), "inner").count() == 0)
   }
 
   test("Grid.dataMetrics / averageDistancePts match brute force bit-for-bit") {
@@ -113,13 +105,18 @@ class SpatialOpsSpec extends AnyFunSuite {
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       .select("key", "env")
     val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val fast = SpatialJoin.envJoin(images, polys, "key", "region_id", level = 5)
+    val intersects = st_intersects_env(col("wkb"), col("env"))
+    val joined = SpatialJoin.join(images, polys, intersects, Quad(5))
+    val fast = joined.select("key", "region_id").as[(Long, Long)].collect().toList
+    val brute = TestSpark.bruteJoin(images, polys, intersects)
       .select("key", "region_id").as[(Long, Long)].collect().toSet
-    val brute = images.crossJoin(polys)
-      .filter(st_intersects_env(col("wkb"), col("env")))
-      .select("key", "region_id").as[(Long, Long)].collect().toSet
-    assert(fast == brute)
+    // exactly once with no dedup: the canonical cell, not an aggregate
+    // over (key, region_id), keeps pairs that share several cells single
+    assert(fast.size == fast.toSet.size, "pairs must surface exactly once")
+    assert(fast.toSet == brute)
     assert(brute.nonEmpty)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("Aggregate"), s"envelope join must not dedup:\n$plan")
   }
 
   test("envMatchIndexed counts equal the envJoin per-key match counts") {
@@ -127,7 +124,7 @@ class SpatialOpsSpec extends AnyFunSuite {
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       .select("key", "env")
     val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val viaJoin = SpatialJoin.envJoin(images, polys, "key", "region_id", level = 5)
+    val viaJoin = SpatialJoin.join(images, polys, st_intersects_env(col("wkb"), col("env")), Quad(5))
       .groupBy("key").count().as[(Long, Long)].collect().toMap
     val viaProbe = SpatialJoin.envMatchIndexed(images, polys)
       .select(col("key"), col("n_regions").cast("long"))
@@ -150,20 +147,10 @@ class SpatialOpsSpec extends AnyFunSuite {
       .filter(col("n_regions") =!= 0).count() == 0L)
   }
 
-  test("salted PIP join equals the unsalted join exactly") {
-    val pts = Fixtures.pointsFromOrders(spark, TestSpark.Sf).select("point_id", "lon", "lat")
-    val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val plain = SpatialJoin.pipJoin(pts, polys).select("point_id", "region_id")
-      .as[(Long, Long)].collect().toSet
-    val salted = SpatialJoin.pipJoinSalted(pts, polys, salt = 5)
-      .select("point_id", "region_id").as[(Long, Long)].collect().toSet
-    assert(salted == plain)
-    assert(plain.nonEmpty)
-  }
-
-  test("salted PIP join at a 50%-hot cell: salt fans the hot cell out, result parity holds") {
-    // half the corpus lands in ONE level-7 cell (a dense metro), the rest
-    // spreads; one region covers the hot cluster
+  test("PIP join at a 50%-hot cell equals brute force") {
+    // half the corpus lands in a 0.01° cluster (a dense metro; its points
+    // on lat = 45 fall one level-7 cell north), the rest spreads; one
+    // region covers the hot cluster
     val n = 4000L
     val pts = spark.range(n).select(col("id").as("point_id"),
         when(col("id") % 2 === 0, lit(10.0) + (col("id") % 97).cast("double") / 10000.0)
@@ -174,29 +161,15 @@ class SpatialOpsSpec extends AnyFunSuite {
       (1L, Wkb.writeBox(9.5, 44.5, 10.5, 45.5)),   // covers the hot cluster
       (2L, Wkb.writeBox(-60.0, -30.0, 20.0, 50.0)), // wide box
       (3L, Wkb.writeBox(100.0, 10.0, 120.0, 30.0))).toDF("region_id", "wkb")
-    val salt = 5
-    val salted = SpatialJoin.pipJoinSalted(pts, polys, salt = salt)
-      .select("point_id", "region_id")
-    salted.collect()
-    // plan audit: the shuffle/join key carries the salt column, so the
-    // hot cell's rows split across `salt` reducers instead of one
-    val plan = salted.queryExecution.executedPlan.toString
-    val saltKeyed = raw"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \[__cell[^\]]*__salt".r
-    assert(saltKeyed.findFirstIn(plan).isDefined,
-      s"join key must include the salt:\n$plan")
-    // the hot cell's points actually occupy every salt bucket
-    val hotSalts = pts.filter(col("point_id") % 2 === 0)
-      .select(pmod(hash(col("lon"), col("lat")), lit(salt))).distinct().count()
-    assert(hotSalts == salt, "hot-cell points must fan across all salt buckets")
-    // exact parity with the unsalted join AND with brute force
-    val got = salted.as[(Long, Long)].collect().toSet
-    val plain = SpatialJoin.pipJoin(pts, polys).select("point_id", "region_id")
+    val hottest = pts.groupBy(cell_of(col("lon"), col("lat"), 7)).count()
+      .agg(max(col("count"))).as[Long].head()
+    assert(hottest >= n * 45 / 100, s"the hottest level-7 cell holds only $hottest points")
+    val contains = st_contains_point(col("wkb"), col("lon"), col("lat"))
+    val got = SpatialJoin.join(pts, polys, contains).select("point_id", "region_id")
+      .as[(Long, Long)].collect().toList
+    val brute = TestSpark.bruteJoin(pts, polys, contains).select("point_id", "region_id")
       .as[(Long, Long)].collect().toSet
-    assert(got == plain && got.nonEmpty)
-    val brute = pts.crossJoin(polys)
-      .filter(st_contains_point(col("wkb"), col("lon"), col("lat")))
-      .select("point_id", "region_id").as[(Long, Long)].collect().toSet
-    assert(got == brute)
+    assert(got.size == got.toSet.size && got.toSet == brute && brute.nonEmpty)
   }
 
   test("writeTiles lays out a hive-partitioned z/x/y tree") {
@@ -212,9 +185,10 @@ class SpatialOpsSpec extends AnyFunSuite {
   test("cell join plan broadcasts the small polygon side and stays codegen'd") {
     val pts = Fixtures.pointsFromOrders(spark, TestSpark.Sf).select("point_id", "lon", "lat")
     val polys = Fixtures.regionBoxes(spark, TestSpark.Sf)
-    val plan = SpatialJoin.pipJoin(pts, polys).queryExecution.executedPlan.toString
+    val plan = SpatialJoin.join(pts, polys, st_contains_point(col("wkb"), col("lon"), col("lat")))
+      .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
     // exact PIP refine must ride ON the join, not as a post-filter
-    assert(plan.contains("BroadcastHashJoin [__cell") && plan.contains("st_contains_point"), plan)
+    assert(plan.contains("BroadcastHashJoin [__pip_cell") && plan.contains("st_contains_point"), plan)
   }
 }

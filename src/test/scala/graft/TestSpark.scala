@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** One shared local session for all Spark suites. */
 object TestSpark {
@@ -18,4 +18,10 @@ object TestSpark {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** Brute-force theta join: the cross product is materialized before
+    * `pred` filters it, so no optimizer rule can cell-key it — the
+    * independent reference the cell-keyed joins are checked against. */
+  def bruteJoin(left: DataFrame, right: DataFrame, pred: Column): DataFrame =
+    left.crossJoin(right).localCheckpoint().filter(pred)
 }

@@ -1,6 +1,8 @@
 package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
+import graft.expr.functions.st_contains_point
 
 /** Packed STR R-tree (FlatGeoBuf packedrtree / CPLQuadTree analog). */
 class StrTreeSpec extends AnyFunSuite {
@@ -51,7 +53,8 @@ class StrTreeSpec extends AnyFunSuite {
     }.toDF("region_id", "wkb")
     val indexed = graft.ops.SpatialJoin.pipJoinIndexed(pts, polys)
       .select("point_id", "region_id").as[(Long, Long)].collect().toSet
-    val cellJoin = graft.ops.SpatialJoin.pipJoin(pts, polys, level = 7)
+    val cellJoin = graft.ops.SpatialJoin.join(pts, polys,
+        st_contains_point(col("wkb"), col("lon"), col("lat")))
       .select("point_id", "region_id").as[(Long, Long)].collect().toSet
     assert(indexed == cellJoin)
     assert(indexed.nonEmpty)
@@ -70,6 +73,6 @@ class StrTreeSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       graft.ops.SpatialJoin.pipJoinIndexed(pts, polys, maxPolys = 10)
     }
-    assert(e.getMessage.contains("pipJoin"), "error must point to the shuffle-join alternative")
+    assert(e.getMessage.contains("SpatialJoin.join"), "error must point to the shuffle-join alternative")
   }
 }

@@ -7,6 +7,9 @@ import org.apache.spark.sql.functions._
   * on SPARK_GRAFT_SF_DIR and the flagship image pipeline, prints ONE JSON
   * line. `value` = total seconds over the headline set; extra key
   * `pipeline_images_per_sec` carries the north-rule throughput metric.
+  * A query that throws in any pass is named in `failed` and counted in
+  * `n_failed`, stays out of `value`, and makes the run exit 1 after the
+  * line is printed.
   *
   * The emitted line is a GATED artifact (round-3 bwgate methodology,
   * BENCH/BASELINE.md): a memory-bandwidth probe runs before and after
@@ -83,11 +86,13 @@ object Bench {
     val regions = regionsDf(spark)
     val t0 = System.nanoTime()
     // stats + footprint + the region PIP probe all ride ONE codegen span
-    // over the persisted corpus: the region layer is dim-sized, so the
-    // join is a broadcast STR-tree probe (envMatchIndexed) — the former
-    // envJoin + dropDuplicates shape shuffled image BYTES through a
-    // cell-explode Exchange and TWO dedup Exchanges; now zero shuffle
-    // before the single tile-key Exchange in baseTiles
+    // over the persisted corpus. Only stats(0) — the band count — is used;
+    // the filter on it is pushed into the scan Filter, where BandCountRule
+    // reads it from the image header, so an image the probe drops is never
+    // decoded and baseTiles decodes each matched image exactly once. The
+    // region layer is dim-sized, so the probe is a broadcast STR-tree
+    // (envMatchIndexed): the only Exchange is baseTiles' tile-key shuffle
+    // of warped windows
     val joined = images
       .withColumn("stats", image_stats(col("bytes"), col("fmt"), col("w"), col("h")))
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
@@ -128,16 +133,23 @@ object Bench {
       .filter(n => only.forall(_.contains(n))).map { name =>
       val walls = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try { qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
-          finally graft.pipeline.Caches.release()
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        try {
+          qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Right((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable => Left(e) }
+        finally graft.pipeline.Caches.release()
       }
-      // min over the SUCCESSFUL walls (a transient single-pass failure must
-      // not silently drop the query from the total); -1 only if all fail
-      val good = walls.filter(_ >= 0)
-      name -> (if (good.isEmpty) -1.0 else good.min)
+      walls.collectFirst { case Left(e) => e }.foreach { e =>
+        System.err.println(s"bench: $name failed")
+        e.printStackTrace()
+      }
+      // a query that fails in any pass is a failed query: named in
+      // `failed`, counted in `n_failed`, left out of the total, and the
+      // run exits non-zero
+      val good = walls.collect { case Right(s) => s }
+      (name, if (good.isEmpty) -1.0 else good.min, walls.exists(_.isLeft))
     }
+    val failed = results.collect { case (name, _, true) => name }
     val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "8000").toLong
     val (nImages, pipeSec) = (1 to passes).map(_ => pipelineThroughput(spark, benchN)).minBy(_._2)
     val ips = nImages / pipeSec
@@ -145,8 +157,10 @@ object Bench {
     val (bwPost4, bwPost16) = graft.tools.BwProbe.pair()
     val gated = graft.tools.BwProbe.healthy(bwPre4, bwPre16) &&
       graft.tools.BwProbe.healthy(bwPost4, bwPost16)
-    val qJson = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum + pipeSec
-    println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","pipeline_images":$nImages,"pipeline_sec":$pipeSec%.3f,"pipeline_images_per_sec":$ips%.1f,"cpus":"$cpus","passes":$passes,"bw_pre_t4_gbps":$bwPre4%.1f,"bw_pre_t16_gbps":$bwPre16%.1f,"bw_post_t4_gbps":$bwPost4%.1f,"bw_post_t16_gbps":$bwPost16%.1f,"bw_gated":$gated}""")
+    val qJson = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = results.collect { case (_, v, false) => v }.sum + pipeSec
+    println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","pipeline_images":$nImages,"pipeline_sec":$pipeSec%.3f,"pipeline_images_per_sec":$ips%.1f,"cpus":"$cpus","passes":$passes,"bw_pre_t4_gbps":$bwPre4%.1f,"bw_pre_t16_gbps":$bwPre16%.1f,"bw_post_t4_gbps":$bwPost4%.1f,"bw_post_t16_gbps":$bwPost16%.1f,"bw_gated":$gated,"n_failed":${failed.length},"failed":$failedJson}""")
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -28,14 +28,56 @@ object ImageCodec {
 
   def decode(bytes: Array[Byte], fmt: String, w: Int, h: Int): Raster = fmt match {
     case "raw" => decodeRaw(bytes, w, h)
-    case "png" | "jpeg" | "jpg" => decodeJavax(bytes)
-    case other => throw new IllegalArgumentException(s"unsupported fmt $other")
+    case "png" | "jpeg" | "jpg" =>
+      val r = decodeJavax(bytes)
+      checkSize(fmt, r.w, r.h, w, h)
+      r
+    case other => unsupported(other)
+  }
+
+  /** Band count of an encoded image, read from its header without decoding
+    * pixels: always equal to `decode(bytes, fmt, w, h).nBands`, and it fails
+    * with the same errors on the same malformed headers (unsupported fmt,
+    * raw size mismatch, declared w/h ≠ payload). A payload whose pixel data
+    * is corrupt behind a sound header passes here and fails only on decode. */
+  def bandCount(bytes: Array[Byte], fmt: String, w: Int, h: Int): Int = fmt match {
+    case "raw" => rawBands(bytes, w, h)
+    case "png" | "jpeg" | "jpg" =>
+      val in = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+      val readers = ImageIO.getImageReaders(in)
+      require(readers.hasNext, NotDecodable)
+      val reader = readers.next()
+      try {
+        reader.setInput(in, true, true)
+        checkSize(fmt, reader.getWidth(0), reader.getHeight(0), w, h)
+        // the first image type is the one ImageIO.read decodes to
+        if (reader.getImageTypes(0).next().getColorModel.getNumComponents == 1) 1 else 3
+      } finally { reader.dispose(); in.close() }
+    case other => unsupported(other)
+  }
+
+  /** A payload whose encoded width/height differ from the row's w/h. */
+  final class SizeMismatch(msg: String) extends IllegalArgumentException(msg)
+
+  private def checkSize(fmt: String, pw: Int, ph: Int, w: Int, h: Int): Unit =
+    if (pw != w || ph != h)
+      throw new SizeMismatch(s"$fmt payload is ${pw}x$ph but the row declares ${w}x$h")
+
+  private def unsupported(fmt: String): Nothing =
+    throw new IllegalArgumentException(s"unsupported fmt $fmt")
+
+  private val NotDecodable = "javax.imageio could not decode image bytes"
+
+  private def rawBands(bytes: Array[Byte], w: Int, h: Int): Int = {
+    val perBand = w * h
+    val nBands = bytes.length / perBand
+    require(nBands * perBand == bytes.length, s"raw size ${bytes.length} not multiple of $w x $h")
+    nBands
   }
 
   def decodeRaw(bytes: Array[Byte], w: Int, h: Int): Raster = {
     val perBand = w * h
-    val nBands = bytes.length / perBand
-    require(nBands * perBand == bytes.length, s"raw size ${bytes.length} not multiple of $w x $h")
+    val nBands = rawBands(bytes, w, h)
     val bands = Array.ofDim[Array[Int]](nBands)
     var b = 0
     while (b < nBands) {
@@ -51,7 +93,7 @@ object ImageCodec {
 
   def decodeJavax(bytes: Array[Byte]): Raster = {
     val img = ImageIO.read(new ByteArrayInputStream(bytes))
-    require(img != null, "javax.imageio could not decode image bytes")
+    require(img != null, NotDecodable)
     val w = img.getWidth
     val h = img.getHeight
     val gray = img.getColorModel.getNumComponents == 1
@@ -153,7 +195,7 @@ object ImageCodec {
     case "raw" => encodeRaw(r)
     case "png" => encodePng(r)
     case "jpeg" | "jpg" => encodeJpeg(r)
-    case other => throw new IllegalArgumentException(s"unsupported fmt $other")
+    case other => unsupported(other)
   }
 
   /** Peak signal-to-noise ratio between two same-shape rasters (dB). */

@@ -246,6 +246,24 @@ case class ImageStats(first: Expression, second: Expression, third: Expression, 
     copy(first = f, second = s, third = t, fourth = q)
 }
 
+/** `image_stats(bytes, fmt, w, h)[0]` — the band count — read from the
+  * image header without decoding pixels (`ImageCodec.bandCount`). Not
+  * registered: `graft.sql.BandCountRule` substitutes it for that one
+  * element of the stats array. */
+case class ImageBandCount(first: Expression, second: Expression, third: Expression, fourth: Expression)
+    extends QuaternaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.types.DataType] = Seq(BinaryType, StringType, IntegerType, IntegerType)
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "image_band_count"
+  override protected def nullSafeEval(bytes: Any, fmt: Any, w: Any, h: Any): Any =
+    graft.core.ImageCodec.bandCount(bytes.asInstanceOf[Array[Byte]], fmt.toString, w.asInstanceOf[Int], h.asInstanceOf[Int]).toDouble
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (b, f, w, h) => s"(double) graft.core.ImageCodec.bandCount($b, $f.toString(), $w, $h)")
+  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression, q: Expression): ImageBandCount =
+    copy(first = f, second = s, third = t, fourth = q)
+}
+
 /** phash64(bytes, fmt, w, h) → 64-bit perceptual average-hash. */
 case class Phash64(first: Expression, second: Expression, third: Expression, fourth: Expression)
     extends QuaternaryExpression with ImplicitCastInputTypes {

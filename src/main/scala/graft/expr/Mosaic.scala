@@ -22,28 +22,50 @@ object MosaicAgg extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
     if (a.isEmpty) return if (b.isEmpty) a else b.clone()
     if (b.isEmpty) return a
     require(a.length == b.length, s"plane buffer mismatch ${a.length} vs ${b.length}")
-    val planePx = PlaneBuf.PlanePx
-    val bands = a.length / planePx - 1
-    val vOff = bands * planePx
-    var i = 0
-    while (i < planePx) {
-      val av = a(vOff + i) != 0
-      val bv = b(vOff + i) != 0
-      if (bv && !av) {
-        var bb = 0
-        while (bb < bands) { a(bb * planePx + i) = b(bb * planePx + i); bb += 1 }
-        a(vOff + i) = 1
-      } else if (av && bv) {
-        var bb = 0
-        while (bb < bands) {
-          val off = bb * planePx + i
-          if ((b(off) & 0xFF) > (a(off) & 0xFF)) a(off) = b(off)
-          bb += 1
-        }
-      }
-      i += 1
-    }
+    blend(a, WarpWindow(0, 0, PlaneBuf.TileSize - 1, PlaneBuf.TileSize - 1, b))
     a
+  }
+
+  /** The blend rule above, written once: blends a window's planes into
+    * the full-tile planes buffer `dst` in place. Pixels outside the window are
+    * untouched, so blending every window of a tile into a zero buffer
+    * equals merging their full-tile renderings. */
+  def blend(dst: Array[Byte], win: WarpWindow): Unit = {
+    val winW = win.px1 - win.px0 + 1
+    val winPx = win.nPx
+    if (winPx == 0) return
+    val src = win.planes
+    val planePx = PlaneBuf.PlanePx
+    val bands = src.length / winPx - 1
+    require((bands + 1) * winPx == src.length && (bands + 1) * planePx == dst.length,
+      s"plane buffer mismatch ${dst.length} vs ${src.length} over a $winPx-pixel window")
+    val vOff = bands * planePx
+    val wvOff = bands * winPx
+    var y = win.py0
+    var j = 0
+    while (y <= win.py1) {
+      var i = y * PlaneBuf.TileSize + win.px0
+      val rowEnd = i + winW
+      while (i < rowEnd) {
+        if (src(wvOff + j) != 0) {
+          if (dst(vOff + i) == 0) {
+            var bb = 0
+            while (bb < bands) { dst(bb * planePx + i) = src(bb * winPx + j); bb += 1 }
+            dst(vOff + i) = 1
+          } else {
+            var bb = 0
+            while (bb < bands) {
+              val v = src(bb * winPx + j)
+              if ((v & 0xFF) > (dst(bb * planePx + i) & 0xFF)) dst(bb * planePx + i) = v
+              bb += 1
+            }
+          }
+        }
+        i += 1
+        j += 1
+      }
+      y += 1
+    }
   }
 
   override def finish(reduction: Array[Byte]): Array[Byte] = reduction

@@ -712,6 +712,15 @@ case class PolygonizeRegions(children: Seq[Expression]) extends Expression with 
     copy(children = c)
 }
 
+/** The part of a tile one image's warp can reach: the inclusive pixel
+  * window (px0, py0)–(px1, py1), empty when px1 < px0 or py1 < py0, and
+  * `planes` — band planes then the 0/1 validity plane, each covering only
+  * the window, row-major. A planes buffer restricted to its footprint:
+  * what `Tiling.baseTiles` shuffles instead of a full tile buffer. */
+final case class WarpWindow(px0: Int, py0: Int, px1: Int, py1: Int, planes: Array[Byte]) {
+  def nPx: Int = if (px1 < px0 || py1 < py0) 0 else (px1 - px0 + 1) * (py1 - py0 + 1)
+}
+
 object WarpKernels {
   import PlaneBuf.{PlanePx, TileSize}
 
@@ -730,8 +739,19 @@ object WarpKernels {
   }
 
   /** Warp an already-decoded raster — lets callers decode ONCE per image
-    * and warp to every covering tile (the dominant cost split at scale). */
+    * and warp to every covering tile (the dominant cost split at scale).
+    * The full-tile planes buffer: [[warpWindow]] pasted into zeros. */
   def warpRasterToTile(decoded: Raster, meta: Array[Double], tile: Long, kernel: String): Array[Byte] = {
+    val buf = new Array[Byte](4 * PlanePx)
+    MosaicAgg.blend(buf, warpWindow(decoded, meta, tile, kernel))
+    buf
+  }
+
+  /** Warp a decoded raster onto one tile, keeping only the window of tile
+    * pixels the source can reach (`Warp.warpInto`'s window; empty when the
+    * source misses the tile): RGB + validity planes of that window. Every
+    * tile pixel outside it is invalid. */
+  def warpWindow(decoded: Raster, meta: Array[Double], tile: Long, kernel: String): WarpWindow = {
     val srid = meta(2).toInt
     val gt = java.util.Arrays.copyOfRange(meta, 3, 9)
     // tiles mosaic across images of mixed band counts → normalize to RGB
@@ -745,10 +765,10 @@ object WarpKernels {
     val out = scratch.get()
     val (px0, py0, px1, py1) = Warp.warpInto(src, gt, srid, dstGt, 3857,
       TileSize, TileSize, kernel, nodata, out)
-    // fresh zero-initialized planes buffer; only the window is scanned —
-    // everything outside is already 0 pixels + 0 validity
-    val buf = new Array[Byte](4 * PlanePx)
-    val vOff = 3 * PlanePx
+    val winPx = (px1 - px0 + 1) * (py1 - py0 + 1) // 0 for the empty (0, 0, -1, -1)
+    // zero-initialized: pixels with any nodata band stay 0 + invalid
+    val planes = new Array[Byte](4 * winPx)
+    var j = 0
     var py = py0
     while (py <= py1) {
       var px = px0
@@ -756,16 +776,17 @@ object WarpKernels {
         val i = py * TileSize + px
         val v0 = out(0)(i); val v1 = out(1)(i); val v2 = out(2)(i)
         if (v0 != nodata && v1 != nodata && v2 != nodata) {
-          buf(i) = v0.toByte
-          buf(PlanePx + i) = v1.toByte
-          buf(2 * PlanePx + i) = v2.toByte
-          buf(vOff + i) = 1
+          planes(j) = v0.toByte
+          planes(winPx + j) = v1.toByte
+          planes(2 * winPx + j) = v2.toByte
+          planes(3 * winPx + j) = 1
         }
         px += 1
+        j += 1
       }
       py += 1
     }
-    buf
+    WarpWindow(px0, py0, px1, py1, planes)
   }
 
   /** Binary cutline mask (gdalcutline.cpp:224 analog): zero out pixels —

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.graft.Bridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** cell_block(cell, r) → array<long>: rings 0..r around a cell (kNN
@@ -359,11 +361,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     registry.foreach { case (name, (info, builder)) =>
       ext.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => graft.sql.CellJoinRule)
+    optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
   }
 }
 
 object GraftExtensions {
+  /** Optimizer rules both registration paths install. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(graft.sql.CellJoinRule, graft.sql.BandCountRule)
+
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft.expr", null, name, usage, "", "", "", "", "4.0.0", "", "built-in")
 
@@ -525,8 +530,7 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.sql.CellJoinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sql.CellJoinRule
+    val installed = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = installed ++ optimizerRules.filterNot(installed.contains)
   }
 }

@@ -32,17 +32,25 @@ object Tiling {
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       .withColumn("tile", explode(tile_cover(col("env"), zmin, zmax)))
 
-  /** Base-zoom tiles: shuffle the (small, still-encoded) source rows by
-    * tile key, then warp + mosaic-merge on the reduce side.
+  /** Base-zoom tiles: warp each image onto its covering tiles map-side,
+    * shuffle the warped windows by tile key, mosaic-merge reduce-side.
+    *
+    * Each image is decoded once, then warped to every tile its footprint
+    * covers; warp work is partitioned by IMAGE (uniform), not by tile
+    * (skewed at low zooms). The shuffled payload per (image, tile) pair is
+    * a [[graft.expr.WarpWindow]]: only the tile pixels the image can reach,
+    * so shuffle bytes scale with the image's footprint, not the tile's
+    * area. A pair whose window is empty still ships (with no pixels) and
+    * counts toward `n_images`.
     *
     * Deliberately NOT groupBy().agg(mosaic_agg): a hash aggregate would
     * hold one 262 KB mosaic buffer per tile seen by a task (≈ all tiles at
     * low zoom → GBs per task), and ObjectHashAggregate's 128-group
     * sort-fallback degrades into an external sort of rendered buffers.
-    * Shuffling encoded bytes instead moves ~5× less data, and mapGroups
-    * streams one tile at a time with O(1) buffers live per task. Mosaic
-    * blend itself stays the commutative MosaicAgg.merge, so results are
-    * partitioning-invariant either way. Returns (tile, n_images, buf). */
+    * mapGroups streams one tile at a time: one zero buffer per tile, each
+    * window blended in by MosaicAgg's commutative rule, so results are
+    * partitioning-invariant and equal to merging full-tile renderings.
+    * Returns (tile, n_images, buf). */
   def baseTiles(images: DataFrame, z: Int, kernel: String = "near"): DataFrame = {
     val spark = images.sparkSession
     import spark.implicits._
@@ -50,30 +58,18 @@ object Tiling {
       .withColumn("env", footprint(col("gt"), col("w"), col("h"), col("srid")))
       .select(col("bytes"), col("fmt"), meta9.as("meta"), col("env"))
       .as[(Array[Byte], String, Seq[Double], Seq[Double])]
-      .mapPartitions { rows =>
-        // map-side warp: decode ONCE per image, render every covering tile.
-        // Shuffled payload = planes buffers, whose zero regions compress to
-        // ~nothing under the shuffle codec; warp work is partitioned by
-        // IMAGE (uniform), not by tile (skewed at low zooms).
-        rows.flatMap { case (bytes, fmt, metaSeq, envSeq) =>
-          val meta = metaSeq.toArray
-          val env = envSeq.toArray
-          val e = new org.apache.spark.sql.catalyst.util.GenericArrayData(env)
-          val tiles = graft.expr.GeoKernels.tileCover(e, z, z).toLongArray()
-          val decoded = graft.core.ImageCodec.decode(bytes, fmt, meta(0).toInt, meta(1).toInt)
-          tiles.iterator.map { t =>
-            (t, graft.expr.WarpKernels.warpRasterToTile(decoded, meta, t, kernel))
-          }
-        }
+      .flatMap { case (bytes, fmt, metaSeq, envSeq) =>
+        val meta = metaSeq.toArray
+        val e = new org.apache.spark.sql.catalyst.util.GenericArrayData(envSeq.toArray)
+        val tiles = graft.expr.GeoKernels.tileCover(e, z, z).toLongArray()
+        val decoded = graft.core.ImageCodec.decode(bytes, fmt, meta(0).toInt, meta(1).toInt)
+        tiles.iterator.map(t => (t, graft.expr.WarpKernels.warpWindow(decoded, meta, t, kernel)))
       }
       .groupByKey(_._1)
-      .mapGroups { (tile, rows) =>
-        var buf: Array[Byte] = null
+      .mapGroups { (tile, windows) =>
+        val buf = new Array[Byte](4 * graft.expr.PlaneBuf.PlanePx)
         var n = 0L
-        rows.foreach { case (_, warped) =>
-          buf = if (buf == null) warped else graft.expr.MosaicAgg.merge(buf, warped)
-          n += 1
-        }
+        windows.foreach { case (_, win) => graft.expr.MosaicAgg.blend(buf, win); n += 1 }
         (tile, n, buf)
       }
       .toDF("tile", "n_images", "buf")

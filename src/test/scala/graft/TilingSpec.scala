@@ -53,6 +53,63 @@ class TilingSpec extends AnyFunSuite {
     assert(run(2) == run(13), "different partitionings must give identical mosaics")
   }
 
+  /** Full-tile RGB + validity planes straight from `Warp.warpInto`: the
+    * reference render, independent of `WarpWindow` and `MosaicAgg.blend`. */
+  private def renderFull(d: Raster, meta: Array[Double], tile: Long): Array[Byte] = {
+    val px = graft.expr.PlaneBuf.PlanePx
+    val src = if (d.nBands == 3) d else Raster(d.w, d.h, Array.fill(3)(d.bands(0)))
+    val out = Array.ofDim[Int](3, px)
+    val dstGt = TileMath.tileGeoTransform(TileMath.unpackZ(tile), TileMath.unpackX(tile), TileMath.unpackY(tile))
+    val (x0, y0, x1, y1) = Warp.warpInto(src, meta.slice(3, 9), meta(2).toInt, dstGt, 3857, 256, 256,
+      "near", -1, out)
+    val buf = new Array[Byte](4 * px)
+    for (y <- y0 to y1; x <- x0 to x1) {
+      val i = y * 256 + x
+      if (out.forall(_(i) != -1)) {
+        (0 until 3).foreach(b => buf(b * px + i) = out(b)(i).toByte)
+        buf(3 * px + i) = 1
+      }
+    }
+    buf
+  }
+
+  test("window fragments mosaic byte-identically to full-tile warps merged per tile") {
+    // the fixture corpus plus one image above Mercator's 85.05° limit:
+    // tile_cover clamps it onto the top row of tiles, but its warp window
+    // there is empty
+    val img = Fixtures.genImage(2L)
+    val polar = img.copy(key = -1L, gt = Array(10.0, 2.0 / img.w, 0.0, 88.0, 0.0, -2.0 / img.h), srid = 4326)
+    val images = Fixtures.imagesFromParts(spark, TestSpark.Sf).unionByName(Seq(polar).toDF())
+    val rows = images.select("bytes", "fmt", "w", "h", "gt", "srid")
+      .as[(Array[Byte], String, Int, Int, Seq[Double], Int)].collect()
+    for (z <- Seq(5, 6)) {
+      val pairs = rows.toSeq.flatMap { case (bytes, fmt, w, h, gt, srid) =>
+        val meta = Array(w.toDouble, h.toDouble, srid.toDouble) ++ gt
+        val env = graft.expr.GeoKernels.footprint(
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(gt.toArray), w, h, srid)
+        val decoded = ImageCodec.decode(bytes, fmt, w, h)
+        graft.expr.GeoKernels.tileCover(env, z, z).toLongArray().toSeq.map(t => (t, decoded, meta))
+      }
+      assert(pairs.exists { case (t, d, m) => graft.expr.WarpKernels.warpWindow(d, m, t, "near").nPx == 0 },
+        s"z$z: no (image, tile) pair with an empty warp window")
+      val want = pairs.groupBy(_._1).map { case (t, ps) =>
+        val bufs = ps.map { case (_, d, m) =>
+          val full = graft.expr.WarpKernels.warpRasterToTile(d, m, t, "near")
+          assert(java.util.Arrays.equals(full, renderFull(d, m, t)), s"z$z tile $t warpRasterToTile")
+          full
+        }
+        t -> (ps.length.toLong, bufs.reduce(graft.expr.MosaicAgg.merge))
+      }
+      assert(want.values.exists(_._1 == 1), s"z$z: no tile hit by exactly one image")
+      val got = Tiling.baseTiles(images, z).as[(Long, Long, Array[Byte])].collect()
+      assert(got.map(_._1).sorted.toSeq == want.keys.toSeq.sorted, s"z$z tile ids")
+      got.foreach { case (t, n, buf) =>
+        assert(n == want(t)._1, s"z$z tile $t n_images")
+        assert(java.util.Arrays.equals(buf, want(t)._2), s"z$z tile $t buffer")
+      }
+    }
+  }
+
   test("pyramid: every parent tile is the packed parent of its children") {
     val images = Fixtures.imagesFromParts(spark, TestSpark.Sf).filter(col("key") % 7 === 0)
     val base = Tiling.baseTiles(images, 4).cache()

@@ -3,20 +3,26 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-round benchmark main (driver contract): times the headline queries
-  * on SPARK_GRAFT_SF_DIR and the flagship image pipeline, prints ONE JSON
+/** The one timing main (driver contract): times the headline queries on
+  * SPARK_GRAFT_SF_DIR and the flagship image pipeline, prints ONE JSON
   * line. `value` = total seconds over the headline set; extra key
   * `pipeline_images_per_sec` carries the north-rule throughput metric.
+  * SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those registered queries;
+  * set to an empty string it times the pipeline alone
+  * (tools/scaling_bench.sh runs one such rung per fresh JVM). An
+  * unregistered name fails the run before anything is timed.
   * A query that throws in any pass is named in `failed` and counted in
   * `n_failed`, stays out of `value`, and makes the run exit 1 after the
   * line is printed.
   *
   * The emitted line is a GATED artifact (round-3 bwgate methodology,
   * BENCH/BASELINE.md): a memory-bandwidth probe runs before and after
-  * the timed region (`bw_pre_*` / `bw_post_*` GiB/s fields, `bw_gated`
-  * = both healthy) and every query is timed over SPARK_GRAFT_BENCH_PASSES
-  * (default 2) passes with the MINIMUM wall reported — steal only ever
-  * ADDS time, so min-wall is the noise-robust estimator on this host.
+  * the timed region (`bw_pre_gbps` / `bw_post_gbps` GiB/s, `bw_gated`
+  * = both at or above `BwProbe.Gate`) and every query and the pipeline
+  * is timed over SPARK_GRAFT_BENCH_PASSES (default 2) passes with the
+  * MINIMUM wall reported — steal only ever ADDS time, so min-wall is
+  * the noise-robust estimator on a shared host. An untimed pipeline
+  * pass of max(500, n/8) images heats the JIT and codegen caches first.
   */
 object Bench {
   val Headline: Seq[String] = Seq(
@@ -58,11 +64,15 @@ object Bench {
     "q169_cell_skew_profile", "q170_hex_bin", "q171_hex_smooth",
     "q172_hex_pip_join")
 
-  def buildSession(cpus: String): SparkSession = {
+  /** SPARK_GRAFT_CPUS, else the host's core count. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(
+    Runtime.getRuntime.availableProcessors)(_.trim.toInt)
+
+  def buildSession(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName("gdalspark-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .appName("gdalspark")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -70,6 +80,19 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** The queries a main runs: `default` when `env` is unset, else the
+    * comma-separated names in it, empty entries dropped (so "" selects
+    * none). Every name must be registered: an unknown one throws rather
+    * than silently selecting nothing. */
+  def select(env: String, default: Seq[String]): Seq[String] = {
+    val names = sys.env.get(env).fold(default)(
+      _.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown queries (from $env or the default list): ${unknown.mkString(", ")}")
+    names
   }
 
   /** North-rule pipeline: decode→stats → footprint → cell/PIP join →
@@ -118,19 +141,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
-    val (bwPre4, bwPre16) = graft.tools.BwProbe.pair()
-    val spark = buildSession(cpus)
+    val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "8000").toLong
+    val names = select("SPARK_GRAFT_BENCH_ONLY", Headline)
+    val bwPre = graft.tools.BwProbe.gbps()
+    val spark = buildSession()
     val qs = SparkEntry.queries
     // untimed warm-up: parquet footers, codegen, corpus materialization
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    graft.gen.Fixtures.imagesFromParts(spark, sfDir)
-    // optional focus list for iterating on specific queries' cost
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val results = Headline.filter(qs.contains)
-      .filter(n => only.forall(_.contains(n))).map { name =>
+    if (names.nonEmpty) {
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      graft.gen.Fixtures.imagesFromParts(spark, sfDir)
+    }
+    val results = names.map { name =>
       val walls = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
         try {
@@ -150,17 +172,16 @@ object Bench {
       (name, if (good.isEmpty) -1.0 else good.min, walls.exists(_.isLeft))
     }
     val failed = results.collect { case (name, _, true) => name }
-    val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "8000").toLong
+    pipelineThroughput(spark, math.max(500L, benchN / 8)) // untimed warm-up
     val (nImages, pipeSec) = (1 to passes).map(_ => pipelineThroughput(spark, benchN)).minBy(_._2)
     val ips = nImages / pipeSec
     spark.stop()
-    val (bwPost4, bwPost16) = graft.tools.BwProbe.pair()
-    val gated = graft.tools.BwProbe.healthy(bwPre4, bwPre16) &&
-      graft.tools.BwProbe.healthy(bwPost4, bwPost16)
+    val bwPost = graft.tools.BwProbe.gbps()
+    val gated = graft.tools.BwProbe.healthy(bwPre) && graft.tools.BwProbe.healthy(bwPost)
     val qJson = results.map { case (k, v, _) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.collect { case (_, v, false) => v }.sum + pipeSec
-    println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","pipeline_images":$nImages,"pipeline_sec":$pipeSec%.3f,"pipeline_images_per_sec":$ips%.1f,"cpus":"$cpus","passes":$passes,"bw_pre_t4_gbps":$bwPre4%.1f,"bw_pre_t16_gbps":$bwPre16%.1f,"bw_post_t4_gbps":$bwPost4%.1f,"bw_post_t16_gbps":$bwPost16%.1f,"bw_gated":$gated,"n_failed":${failed.length},"failed":$failedJson}""")
+    println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qJson,"sf":"$sfDir","pipeline_images":$nImages,"pipeline_sec":$pipeSec%.3f,"pipeline_images_per_sec":$ips%.1f,"cpus":"$cpus","passes":$passes,"bw_pre_gbps":$bwPre%.1f,"bw_post_gbps":$bwPost%.1f,"bw_gated":$gated,"n_failed":${failed.length},"failed":$failedJson}""")
     if (failed.nonEmpty) sys.exit(1)
   }
 }

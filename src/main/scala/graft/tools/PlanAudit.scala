@@ -1,49 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Prints formatted physical plans of representative queries and greps the
-  * properties that matter at scale (filter pushdown, pruned read schema,
-  * broadcast choice, codegen spans). Run per round; findings land in
-  * PLANS.md. */
+/** Prints the formatted physical plan of every registered query (or the
+  * SPARK_GRAFT_ONLY list, as in Verify) plus `Tiling.baseTiles`, for
+  * grepping the properties that matter at scale (filter pushdown, pruned
+  * read schema, broadcast choice, codegen spans). Run per round;
+  * findings land in PLANS.md. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = graft.Bench.buildSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    val names = Seq("q05_filter_pred", "q02_groupby_agg", "q07_join_inner",
-      "q22_pip_join", "q44_cosine_topk", "q16_events_window",
-      "q61_layer_intersection", "q64_dissolve", "q67_zonal_full",
-      "q70_grid_nearest", "q50_ann_lsh", "q93_gcp_poly", "q95_rpc_forward",
-      "q96_point_overlay", "q85_sql_intersects_join", "q46_minhash_lsh",
-      "q87_buffer", "q88_grid_linear", "q89_density_mosaic",
-      // round 4
-      "q39_contour_polygons", "q99_ivf_topk", "q101_gcp_warp_tiles",
-      "q102_concave_hull", "q103_grid_linear_tiled", "q104_incremental_tiles",
-      "q105_cosine_neardup", "q106_color_relief", "q107_hillshade_modes",
-      "q108_zt_family", "q109_tpi_tri", "q110_aspect", "q111_focal_stats",
-      "q112_raster_blend",
-      "q113_phash_neardup", "q114_phash_clusters", "q115_bm25_topk",
-      "q116_stratified_sample", "q117_stratified_topk", "q118_dedup_pipeline",
-      "q119_decontaminate", "q120_repetition", "q121_nearblack",
-      "q122_homography", "q123_los", "q124_geoloc", "q125_surf_match",
-      "q126_suggested_output", "q127_ivfpq_topk", "q128_equalize", "q129_segment_dedup",
-      "q130_kmeans", "q131_semdedup", "q132_gopher_filter", "q133_temperature_mix", "q134_pii_mask", "q135_hist_match", "q136_aspect_batches",
-      "q137_raster_compare", "q138_xyz_extract", "q139_dsir_topk", "q140_voronoi_assign",
-      "q141_label_outliers", "q142_image_chips",
-      "q143_gcp_refine", "q144_shard_pack", "q145_image_quality", "q146_caption_align",
-      "q147_bpe_tokens", "q148_augment", "q152_leakage_split",
-      "q153_ann_recall", "q154_epoch_shuffle", "q155_contour_rings",
-      "q156_sequence_pack", "q157_spatial_split",
-      // round 5
-      "q158_contour_ring_features", "q159_tps_warp_tiles", "q160_simplify_topo",
-      "q161_rpc_warp_tiles", "q162_join_first_match",
-      "q163_asof_join", "q164_interval_join", "q165_rollup",
-      "q166_hll_distinct", "q167_token_quantiles", "q168_cms_heavyhitters",
-      "q169_cell_skew_profile", "q170_hex_bin", "q171_hex_smooth",
-      "q172_hex_pip_join")
-    // local-iteration filter, mirroring Verify's
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    names.filter(n => only.forall(_.contains(n))).foreach { n =>
+    val names = graft.Bench.select("SPARK_GRAFT_ONLY", graft.SparkEntry.queries.keys.toSeq.sorted)
+    val spark = graft.Bench.buildSession()
+    names.foreach { n =>
       println(s"\n########## $n ##########")
       val df = graft.SparkEntry.queries(n)(spark, sf)
       println(df.queryExecution.explainString(

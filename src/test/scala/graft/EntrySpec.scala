@@ -18,6 +18,13 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
+  test("every Bench.Headline name is registered and listed once") {
+    val unknown = Bench.Headline.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"headline names not in the registry: $unknown")
+    val twice = Bench.Headline.diff(Bench.Headline.distinct)
+    assert(twice.isEmpty, s"headline names listed twice: $twice")
+  }
+
   test("oracle SQL keys are a subset of query keys") {
     val unknown = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"oracles without queries: $unknown")

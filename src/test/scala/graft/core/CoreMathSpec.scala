@@ -23,6 +23,12 @@ class CoreMathSpec extends AnyFunSuite {
     assert(math.abs(GeoTransform.applyX(inv2, gx, gy) - 3.0) < 1e-9)
   }
 
+  test("degenerate geotransform has no inverse; unknown srid is a named error") {
+    assert(GeoTransform.invert(Array(0.0, 0, 0, 0, 0, 0)).isEmpty)
+    val e = intercept[IllegalArgumentException](CrsTransform.toLonLat(9999, 0, 0))
+    assert(e.getMessage == "unsupported srid 9999")
+  }
+
   test("mercator known values and roundtrip") {
     assert(math.abs(Mercator.x(180.0) - 20037508.342789244) < 1e-6)
     assert(math.abs(Mercator.x(0.0)) < 1e-9)
